@@ -29,7 +29,8 @@ Scale design (100 TB corpus):
 
 from __future__ import annotations
 
-import os
+import warnings
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -467,13 +468,17 @@ _AB = [((2 * i + 1) * 2_654_435_761 % _M31 | 1, (i * 40_503 * 65_537) % _M31)
        for i in range(_N_HASH)]
 _SPARK_H = "cast(conv(substring(md5(s), 1, 7), 16, 10) as bigint)"
 _DUCK_H = "CAST(('0x' || substr(md5(s), 1, 7)) AS BIGINT)"
-_SPARK_SIGS = ", ".join(
-    f"min(({a} * h + {b}) % {_M31}) AS sig_{i}"
-    for i, (a, b) in enumerate(_AB))
-_DUCK_SIGS = ", ".join(
-    f"min(({a} * h + {b}) % {_M31}) AS sig_{i}"
-    for i, (a, b) in enumerate(_AB))
+#: The 16 signature aggregates over ``h`` — the same text on both engines.
+_SIGS = [f"min(({a} * h + {b}) % {_M31}) AS sig_{i}"
+         for i, (a, b) in enumerate(_AB)]
 _R = _N_HASH // _N_BANDS
+_SPARK_BANDS = ["md5(concat_ws('|', " + ", ".join(
+    f"sig_{b * _R + r}" for r in range(_R)) + f")) AS band_{b}"
+    for b in range(_N_BANDS)]
+_DUCK_BANDS = ", ".join(
+    "md5(" + " || '|' || ".join(
+        f"sig_{b * _R + r}" for r in range(_R)) + f") AS band_{b}"
+    for b in range(_N_BANDS))
 
 #: Verification-shape gate for op_minhash_dedup: above this average
 #: uncompressed documents.text bytes/row (parquet-footer metadata, no
@@ -485,35 +490,124 @@ _R = _N_HASH // _N_BANDS
 #: posture as `_COSINE_MAX_PAIR_WORK` in llm_vec.
 _MINHASH_INLINE_MAX_AVG_TEXT_BYTES = 16_384
 
-#: Byte budget for the inline-mode band-table persist (r16, VERDICT r15
-#: item 3): the cached frame is doc-grain but each row carries the full
-#: shingle array (~k× the text bytes, k=3 overlap), so on a
-#: many-small-docs corpus the MEMORY_AND_DISK footprint is corpus-scale
-#: even though the avg-bytes gate correctly picked inline. Above this
+#: Byte budget for the MinHash persists (VERDICT r15 item 3). The band
+#: table is doc-grain, but inline-mode rows carry the full shingle array
+#: (~k× the text bytes, k=3 overlap) and the rejoin-mode shingle index
+#: is ~3× the corpus, so on a large corpus the MEMORY_AND_DISK footprint
+#: is corpus-scale whichever shape the avg-bytes gate picked. Above this
 #: estimated TOTAL uncompressed documents.text size (rows × avg bytes,
-#: parquet footers only — zero Spark jobs) the persist is SKIPPED: the
-#: plan is byte-identical, Catalyst just re-plans the signature subtree
-#: for both self-join sides (2 corpus scans) instead of writing ~3× the
-#: corpus to bounded executor local disk. Local default 8 GiB (cache
-#: ≈ 24 GiB worst case on the 128 GiB box); production boxes size it to
-#: their local-disk budget via the env var.
-_MINHASH_INLINE_CACHE_MAX_TOTAL_TEXT_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_MINHASH_CACHE_BUDGET_BYTES", 8 * 1024**3))
+#: parquet footers only — zero Spark jobs) nothing is persisted: the
+#: plan is otherwise identical, Catalyst just re-plans the signature
+#: subtree for each consumer instead of writing ~3× the corpus to
+#: bounded executor local disk. 8 GiB caps the cache at ≈ 24 GiB worst
+#: case on a 128 GiB box.
+_MINHASH_CACHE_MAX_TOTAL_TEXT_BYTES = 8 * 1024**3
 
 
-def _minhash_inline_cache_fits(sf_dir: str) -> bool:
-    """True iff the inline band table's persist stays inside the byte
-    budget (footer metadata only; unknown backing → True, matching the
-    avg-bytes gate's fixture-scale default)."""
+def _minhash_cache_fits(sf_dir: str) -> bool:
+    """True iff the MinHash persists stay inside the byte budget (footer
+    metadata only; unknown backing → True, matching the avg-bytes gate's
+    fixture-scale default)."""
     rows = table_row_count(sf_dir, "documents")
     avg = table_column_avg_bytes(sf_dir, "documents", "text")
     if rows is None or avg is None:
         return True
-    return rows * avg <= _MINHASH_INLINE_CACHE_MAX_TOTAL_TEXT_BYTES
-_DUCK_BANDS = ", ".join(
-    "md5(" + " || '|' || ".join(
-        f"sig_{b * _R + r}" for r in range(_R)) + f") AS band_{b}"
-    for b in range(_N_BANDS))
+    return rows * avg <= _MINHASH_CACHE_MAX_TOTAL_TEXT_BYTES
+
+
+def _minhash_candidates(spark: SparkSession, sf_dir: str,
+                        docs: DataFrame | None = None, *,
+                        shingles: bool = True, sigs: bool = False,
+                        split: tuple[str, str] | None = None,
+                        ) -> tuple[DataFrame, DataFrame]:
+    """The one MinHash-LSH candidate builder behind every MinHash key:
+    shingles → base hash → 16 signatures → 4 md5 bands → one
+    ``(doc_id, b_idx, band)`` row per band → the band-keyed self-join.
+
+    Returns ``(cand, sh)``. ``cand`` is the join with its two sides
+    aliased ``a`` and ``b``; each side carries ``doc_id``, ``b_idx``,
+    ``band`` plus the requested payload: ``shingles`` (the doc's shingle
+    set, re-nested by ``collect_list`` in the signature shuffle) and, with
+    ``sigs``, ``sig_0..sig_15``. The join key is ``(b_idx, band)``; pairs
+    are ordered ``a.doc_id < b.doc_id``, unless ``split`` gives one SQL
+    predicate per side (e.g. corpus vs incoming batch), which then
+    filters each side instead. Multi-band collisions repeat a pair — the
+    caller DISTINCTs. ``sh`` is the exploded ``(doc_id, s)`` shingle index
+    that the rejoin verification shape reads back.
+
+    ``docs`` (optional, columns doc_id + toks) lets a composition such as
+    op_pipeline_e2e feed ONE shared tokenized corpus into every stage
+    instead of each stage re-scanning documents.text.
+    Standalone, the corpus is scanned + tokenized here, repartitioned up
+    front: it lands as one file = one scan task, and the shingling +
+    16×|shingles| hash pipeline is CPU-bound.
+
+    Plan notes:
+    - Signatures via explode + groupBy: each md5(shingle) computed
+      exactly once. (An array-HOF formulation — array_min(transform())
+      per seed — reads prettier but Catalyst's projection collapse
+      inlines the 16 transforms into every downstream band expression,
+      an exponential recompute; measured 10× slower.)
+    - **The band table is materialized ONCE (r15).** The self-join reads
+      it twice, and Catalyst plans two full scan→shingle→md5→aggregate
+      subtrees for it (plans/r15/op_minhash_dedup_before.txt: operators
+      (1)-(9) and (12)-(20) are the same pipeline) — REPARTITION's
+      round-robin exchange blocks ReuseExchange. A lazy
+      ``scoped_persist`` of the doc-grain band table collapses that to
+      one corpus pass. Lazy, not eager: plan build stays zero-job
+      (test_minhash_gate_is_metadata_only), and the broadcast build side
+      fills the cache before the probe side streams. Released by the
+      caller via release_all().
+    - Without the shingle payload (rejoin shape) ``sh`` is read by four
+      subtrees (signature build, cardinalities, both sides of the
+      intersection join), so it is persisted too and the tokenize +
+      shingle + explode pipeline runs once instead of four times.
+    - Both persists are made only inside
+      ``_MINHASH_CACHE_MAX_TOTAL_TEXT_BYTES``. The budget is sized from
+      the full ``documents`` footers even when ``docs`` is a reduced
+      frame (op_pipeline_e2e passes its shared tokenized corpus): the
+      estimate is conservative — it may skip a persist that would fit —
+      and never changes the result."""
+    if docs is None:
+        np_ = spark.sparkContext.defaultParallelism
+        docs = Q(spark, sf_dir,
+                 f"SELECT /*+ REPARTITION({np_}) */ doc_id,"
+                 f" {_SPARK_TOKS} AS toks FROM documents")
+    cache = _minhash_cache_fits(sf_dir)
+    sh = (docs.selectExpr("doc_id", f"{_SPARK_SHINGLES} AS shingles")
+              .selectExpr("doc_id", "explode(shingles) AS s"))
+    if cache and not shingles:
+        sh = scoped_persist(sh)
+    aggs = [F.expr(e) for e in _SIGS]
+    payload = []
+    if shingles:
+        aggs.append(F.expr("collect_list(s) AS shingles"))
+        payload.append("shingles")
+    if sigs:
+        payload += [f"sig_{i}" for i in range(_N_HASH)]
+    band = (sh.selectExpr("doc_id", "s", f"{_SPARK_H} AS h")
+              .groupBy("doc_id").agg(*aggs)
+              .selectExpr("doc_id", *payload, *_SPARK_BANDS))
+    if cache:
+        band = scoped_persist(band)
+    band_rows = ", ".join(f"named_struct('b_idx', {b}, 'band', band_{b})"
+                          for b in range(_N_BANDS))
+    bl = band.selectExpr("doc_id", *payload, f"inline(array({band_rows}))")
+    if split is None:
+        a, b = bl.alias("a"), bl.alias("b")
+        order = [F.col("a.doc_id") < F.col("b.doc_id")]
+    else:
+        a, b = bl.where(split[0]).alias("a"), bl.where(split[1]).alias("b")
+        order = []
+    cand = a.join(b, [F.col("a.b_idx") == F.col("b.b_idx"),
+                      F.col("a.band") == F.col("b.band"), *order])
+    return cand, sh
+
+
+#: Exact shingle-set overlap of a `_minhash_candidates` pair, read off
+#: the band-row payload: intersection ``c`` and the two set sizes.
+_PAIR_OVERLAP = ("size(array_intersect(a.shingles, b.shingles)) AS c",
+                 "size(a.shingles) AS na", "size(b.shingles) AS nb")
 
 
 #: The MinHash+LSH pair query as a reusable CTE chain (ends in
@@ -524,7 +618,7 @@ _DUCK_MINHASH_CTES = f"""
     tok AS (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
     sh AS (SELECT doc_id, unnest({_DUCK_SHINGLES}) AS s FROM tok),
     shh AS (SELECT doc_id, {_DUCK_H} AS h FROM sh),
-    sig AS (SELECT doc_id, {_DUCK_SIGS} FROM shh GROUP BY doc_id),
+    sig AS (SELECT doc_id, {", ".join(_SIGS)} FROM shh GROUP BY doc_id),
     band AS (SELECT doc_id, {_DUCK_BANDS} FROM sig),
     bl AS (SELECT doc_id, b_idx, band FROM band
            UNPIVOT (band FOR b_idx IN (band_0, band_1, band_2, band_3))),
@@ -560,7 +654,8 @@ def op_minhash_dedup(spark: SparkSession, sf_dir: str,
     universal hashing (one 28-bit md5-derived base hash per shingle,
     sig_i = min((a_i·h + b_i) mod M31)), 4 bands × 4 rows, candidates =
     pairs sharing any full band, then exact-Jaccard verification ≥ 0.5
-    on candidates only.
+    on candidates only. Signatures, bands and candidates come from
+    `_minhash_candidates`; this op owns only the verification stage.
 
     Scale: signatures/bands are per-row array HOFs — ZERO shuffle until
     the candidate join, which shuffles on (band_idx, band_hash); bucket
@@ -574,165 +669,60 @@ def op_minhash_dedup(spark: SparkSession, sf_dir: str,
     The verification stage has two exact-equivalent plans, picked by a
     footer-metadata size gate (same pattern as `_COSINE_MAX_PAIR_WORK`):
 
-    - **inline** (small docs): ``collect_list(s)`` re-nests the shingle
+    - **inline** (small docs): ``collect_list`` re-nests the shingle
       set in the signature shuffle so verification reads it off the
       candidate row (``array_intersect``) — measured ~2.8× faster at
       fixture scale because nothing is re-derived. Cost: band rows
       carry ~(n_bands × shingle bytes) per doc into the candidate
-      shuffle.
+      shuffle. Multi-band duplicates are dropped AFTER the verification
+      filter (the post-filter set is tiny — one less shuffle over the
+      wide payload).
     - **rejoin** (fat docs): band rows carry ONLY (doc_id, b_idx,
-      band_hash); candidates are DISTINCTed as bare id pairs, then
-      verified by re-joining the shingle index on doc_id (the oracle's
-      own shape). The candidate shuffle payload is O(1) per row no
-      matter the document size — the 100 TB-safe default for
-      book-length docs (VERDICT r13 item 2).
+      band_hash); candidates are DISTINCTed as bare id pairs (duplicates
+      would double-count the intersection join), then verified by
+      re-joining the shingle index on doc_id (the oracle's own shape).
+      The candidate shuffle payload is O(1) per row no matter the
+      document size — the 100 TB-safe default for book-length docs
+      (VERDICT r13 item 2).
 
     Gate: average uncompressed bytes/row of ``documents.text`` from
     parquet footers (`catalog.table_column_avg_bytes`, zero scan) vs
-    ``_MINHASH_INLINE_MAX_AVG_TEXT_BYTES``; overridable for probes via
-    ``SPARK_GRAFT_MINHASH_VERIFY=inline|rejoin``. Both variants are
-    hash-equal by construction and pinned so by
+    ``_MINHASH_INLINE_MAX_AVG_TEXT_BYTES``; unknown backing → inline
+    (fixture-scale default). The threshold is avg TEXT bytes: shingle-set
+    bytes scale linearly with it (k-gram overlap ≈ k× text), so text is
+    the cheap, always-present proxy. Both shapes are hash-equal by
+    construction and pinned so by
     tests/test_llm_text.py::test_minhash_rejoin_variant_hash_equal."""
-    mode = os.environ.get("SPARK_GRAFT_MINHASH_VERIFY", "auto")
-    if mode not in ("auto", "inline", "rejoin"):
-        raise ValueError(
-            f"SPARK_GRAFT_MINHASH_VERIFY={mode!r}; "
-            "expected auto|inline|rejoin")
-    if mode == "auto":
-        avg = table_column_avg_bytes(sf_dir, "documents", "text")
-        # Unknown backing → inline (fixture-scale default); fat docs →
-        # re-join. The threshold is avg TEXT bytes: shingle-set bytes
-        # scale linearly with it (k-gram overlap ≈ k× text), so text
-        # is the cheap, always-present proxy.
-        mode = ("rejoin" if avg is not None
-                and avg > _MINHASH_INLINE_MAX_AVG_TEXT_BYTES
-                else "inline")
-        if mode == "rejoin":
-            # Gate decisions must be observable (VERDICT r14 item 5:
-            # "log the taken path") — the shape fuzz asserts this
-            # fires on its mega-doc catalog.
-            import warnings
-            warnings.warn(
-                f"op_minhash_dedup: avg documents.text bytes {avg:.0f}"
-                f" > {_MINHASH_INLINE_MAX_AVG_TEXT_BYTES}; auto gate"
-                " selected the doc_id-rejoin verification shape",
-                RuntimeWarning, stacklevel=2)
-    np = spark.sparkContext.defaultParallelism
-    return _minhash_pairs_df(spark, sf_dir, np, mode, docs=docs)
-
-
-def _minhash_pairs_df(spark: SparkSession, sf_dir: str, np: int,
-                      mode: str, docs: DataFrame | None = None) -> DataFrame:
-    """The op_minhash_dedup plan, in the requested verification shape
-    (``mode`` ∈ {"inline", "rejoin"} — see the op docstring).
-
-    Shared plan notes (both shapes):
-    - repartition up front: the corpus lands as one file = one scan
-      task, and everything downstream (shingling, 16×|shingles| md5s)
-      is CPU-bound — spread it across cores before the heavy
-      projections.
-    - Signatures via explode + groupBy: each md5(shingle) computed
-      exactly once. (An array-HOF formulation — array_min(transform())
-      per seed — reads prettier but Catalyst's projection collapse
-      inlines the 16 transforms into every downstream band expression,
-      an exponential recompute; measured 10× slower.)
-    - **The signature table is materialized ONCE (r15).** The band
-      self-join references its input twice, and Catalyst plans two
-      full scan→shingle→md5→17-aggregate subtrees for it (confirmed in
-      plans/r15/op_minhash_dedup_before.txt: operators (1)-(9) and
-      (12)-(20) are the same pipeline) — REPARTITION's round-robin
-      exchange blocks ReuseExchange. A lazy ``scoped_persist`` of the
-      per-doc band table collapses that to one corpus pass (guide
-      §1.2: don't compute things twice). Lazy, not eager: plan build
-      must stay zero-job (pinned by
-      test_minhash_gate_is_metadata_only...), and the broadcast build
-      side fills the cache before the probe side streams. The cached
-      frame is doc-grain (1 row/doc — bands + shingle set inline-mode
-      only), released by the caller via release_all().
-    - In rejoin mode the exploded shingle index ``sh`` is read by FOUR
-      subtrees (signature build, cardinalities, both sides of the
-      intersection join) — it is persisted too, so the tokenize+
-      shingle+explode pipeline runs once instead of four times (same
-      treatment as `_shingle_index` in the n-gram pair, r15).
-    - Multi-band collisions produce duplicate candidates. inline dedups
-      AFTER the verification filter (post-filter set is tiny — one less
-      shuffle over the wide payload set); rejoin dedups BEFORE the
-      verify join (bare id pairs are cheap to DISTINCT, and duplicate
-      pairs would double-count the intersection join)."""
-    band_cols = [f"{e} AS band_{b}" for b, e in enumerate(_split_bands())]
-    # ``docs`` (optional, columns doc_id + toks) lets a composition such
-    # as op_pipeline_e2e feed ONE shared tokenized corpus into every
-    # stage instead of each stage re-scanning documents.text (guide
-    # §8.4: decide on lightweight proxies, read the heavy column once).
-    # Standalone, the corpus is scanned + tokenized here, repartitioned
-    # up front (the corpus lands as one file = one scan task, and the
-    # shingling + 16×|shingles| hash pipeline is CPU-bound).
-    if docs is None:
-        docs = Q(spark, sf_dir,
-                 f"SELECT /*+ REPARTITION({np}) */ doc_id,"
-                 f" {_SPARK_TOKS} AS toks FROM documents")
-    d = docs.selectExpr("doc_id", f"{_SPARK_SHINGLES} AS shingles")
-    sh_plan = d.selectExpr("doc_id", "explode(shingles) AS s")
-    shh = sh_plan.selectExpr("doc_id", "s", f"{_SPARK_H} AS h")
-    sig_aggs = [F.expr(f"min(({a} * h + {b}) % {_M31})").alias(f"sig_{i}")
-                for i, (a, b) in enumerate(_AB)]
-    bands_inline = ", ".join(
-        f"named_struct('b_idx', {b}, 'band', band_{b})"
-        for b in range(_N_BANDS))
-    if mode == "inline":
-        band = (shh.groupBy("doc_id")
-                   .agg(*sig_aggs,
-                        F.collect_list("s").alias("shingles"))
-                   .selectExpr("doc_id", "shingles", *band_cols))
-        # Persist only inside the byte budget (r16): the cache carries
-        # the full shingle payload per doc — see
-        # _MINHASH_INLINE_CACHE_MAX_TOTAL_TEXT_BYTES. Over budget the
-        # identical plan runs unpersisted (both self-join sides re-plan
-        # the signature subtree — 2 scans beat a corpus-scale spill).
-        if _minhash_inline_cache_fits(sf_dir):
-            band = scoped_persist(band)
-        bl = band.selectExpr(
-            "doc_id", "shingles", f"inline(array({bands_inline}))")
-        a, b = bl.alias("a"), bl.alias("b")
-        cand = (a.join(b, [F.col("a.b_idx") == F.col("b.b_idx"),
-                           F.col("a.band") == F.col("b.band"),
-                           F.col("a.doc_id") < F.col("b.doc_id")])
-                 .select(F.col("a.doc_id").alias("doc_a"),
-                         F.col("b.doc_id").alias("doc_b"),
-                         F.col("a.shingles").alias("sha"),
-                         F.col("b.shingles").alias("shb")))
-        return (cand.selectExpr(
-                    "doc_a", "doc_b",
-                    "size(array_intersect(sha, shb)) AS c",
-                    "size(sha) AS na", "size(shb) AS nb")
+    avg = table_column_avg_bytes(sf_dir, "documents", "text")
+    inline = avg is None or avg <= _MINHASH_INLINE_MAX_AVG_TEXT_BYTES
+    if not inline:
+        # Gate decisions must be observable (VERDICT r14 item 5: "log
+        # the taken path") — the shape fuzz asserts this fires on its
+        # mega-doc catalog.
+        warnings.warn(
+            f"op_minhash_dedup: avg documents.text bytes {avg:.0f}"
+            f" > {_MINHASH_INLINE_MAX_AVG_TEXT_BYTES}; auto gate"
+            " selected the doc_id-rejoin verification shape",
+            RuntimeWarning, stacklevel=2)
+    cand, sh = _minhash_candidates(spark, sf_dir, docs, shingles=inline)
+    if inline:
+        return (cand.selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b",
+                                *_PAIR_OVERLAP)
                     .where("2 * c >= (na + nb - c)")
                     .selectExpr("doc_a", "doc_b",
                                 f"{_JACCARD_PPM} AS jaccard_ppm")
                     .distinct())
-    # rejoin: bl carries (doc_id, b_idx, band) ONLY — no payload rides
-    # the candidate shuffle. Verification mirrors the oracle's inter
-    # CTE: equi-join the shingle index on both ids, count matches.
-    sh = scoped_persist(sh_plan)
-    band = scoped_persist(
-        sh.selectExpr("doc_id", "s", f"{_SPARK_H} AS h")
-          .groupBy("doc_id")
-          .agg(*sig_aggs)
-          .selectExpr("doc_id", *band_cols))
-    bl = band.selectExpr("doc_id", f"inline(array({bands_inline}))")
-    a, b = bl.alias("a"), bl.alias("b")
-    cand = (a.join(b, [F.col("a.b_idx") == F.col("b.b_idx"),
-                       F.col("a.band") == F.col("b.band"),
-                       F.col("a.doc_id") < F.col("b.doc_id")])
-             .select(F.col("a.doc_id").alias("doc_a"),
-                     F.col("b.doc_id").alias("doc_b"))
-             .distinct())
+    # rejoin: verification mirrors the oracle's inter CTE — equi-join
+    # the shingle index on both ids, count matches.
+    pairs = cand.selectExpr("a.doc_id AS doc_a",
+                            "b.doc_id AS doc_b").distinct()
     card = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     x, y = sh.alias("x"), sh.alias("y")
-    inter = (cand.join(x, F.col("x.doc_id") == F.col("doc_a"))
-                 .join(y, (F.col("y.doc_id") == F.col("doc_b"))
-                       & (F.col("y.s") == F.col("x.s")))
-                 .groupBy("doc_a", "doc_b")
-                 .agg(F.count("*").alias("c")))
+    inter = (pairs.join(x, F.col("x.doc_id") == F.col("doc_a"))
+                  .join(y, (F.col("y.doc_id") == F.col("doc_b"))
+                        & (F.col("y.s") == F.col("x.s")))
+                  .groupBy("doc_a", "doc_b")
+                  .agg(F.count("*").alias("c")))
     return (inter
             .join(card.selectExpr("doc_id", "n AS na"),
                   F.col("doc_id") == F.col("doc_a")).drop("doc_id")
@@ -741,13 +731,6 @@ def _minhash_pairs_df(spark: SparkSession, sf_dir: str, np: int,
             .where("2 * c >= (na + nb - c)")
             .selectExpr("doc_a", "doc_b",
                         f"{_JACCARD_PPM} AS jaccard_ppm"))
-
-
-def _split_bands() -> list[str]:
-    """Band md5 expressions (Spark SQL text), one per band."""
-    return ["md5(concat_ws('|', " + ", ".join(
-        f"sig_{b * _R + r}" for r in range(_R)) + "))"
-        for b in range(_N_BANDS)]
 
 
 # ---------------------------------------------------------------------------
@@ -1129,51 +1112,27 @@ def op_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (even doc_ids) WITHOUT recomputing corpus×corpus pairs — the shape
     every continuously-ingesting pipeline needs, where re-running
     `op_minhash_dedup` over corpus+batch would redo O(corpus) work per
-    batch. Same MinHash/LSH machinery; the candidate join is
-    batch-bands ⋈ corpus-bands only.
+    batch. Same `_minhash_candidates` builder, split into corpus and
+    batch sides, so the candidate join is batch-bands ⋈ corpus-bands
+    only.
 
     Scale: at 10^10 docs the corpus band table is written ONCE
     (doc_id, b_idx, band — a persisted index, bucketed by (b_idx,
     band)) and each batch joins against it; per-batch cost is
     O(batch × collision sets), independent of corpus size. Here both
-    sides derive from one scan since the fixture has no second table;
-    the split filters push into each branch. Oracle cross-checks by
+    sides read one persisted band table since the fixture has no second
+    table; the split filters push into each branch. Oracle cross-checks by
     filtering the full pair set to cross-parity pairs — same result,
     quadratic route."""
-    np = spark.sparkContext.defaultParallelism
-    band_cols = ", ".join(
-        f"{e} AS band_{b}" for b, e in enumerate(_split_bands()))
-    bands_inline = ", ".join(
-        f"named_struct('b_idx', {b}, 'band', band_{b})"
-        for b in range(_N_BANDS))
-    return Q(spark, sf_dir, f"""
-        WITH raw AS (SELECT /*+ REPARTITION({np}) */ doc_id, text
-                     FROM documents),
-        d AS (SELECT doc_id, {_SPARK_SHINGLES} AS shingles
-              FROM (SELECT doc_id, {_SPARK_TOKS} AS toks FROM raw)),
-        sh AS (SELECT doc_id, explode(shingles) AS s FROM d),
-        shh AS (SELECT doc_id, s, {_SPARK_H} AS h FROM sh),
-        sig AS (SELECT doc_id, {_SPARK_SIGS},
-                       collect_list(s) AS shingles
-                FROM shh GROUP BY doc_id),
-        band AS (SELECT doc_id, shingles, {band_cols} FROM sig),
-        bl AS (SELECT doc_id, shingles,
-                      inline(array({bands_inline}))
-               FROM band),
-        corpus_ix AS (SELECT * FROM bl WHERE doc_id % 2 = 0),
-        batch AS (SELECT * FROM bl WHERE doc_id % 2 = 1),
-        cand AS (SELECT c.doc_id AS corpus_doc, n.doc_id AS new_doc,
-                        c.shingles AS sha, n.shingles AS shb
-                 FROM corpus_ix c JOIN batch n
-                   ON c.b_idx = n.b_idx AND c.band = n.band)
-        SELECT DISTINCT corpus_doc, new_doc, {_JACCARD_PPM} AS jaccard_ppm
-        FROM (SELECT corpus_doc, new_doc,
-                     size(array_intersect(sha, shb)) AS c,
-                     size(sha) AS na, size(shb) AS nb
-              FROM cand)
-        WHERE 2 * c >= (na + nb - c)
-        ORDER BY corpus_doc, new_doc
-    """)
+    cand, _ = _minhash_candidates(
+        spark, sf_dir, split=("doc_id % 2 = 0", "doc_id % 2 = 1"))
+    return (cand.selectExpr("a.doc_id AS corpus_doc", "b.doc_id AS new_doc",
+                            *_PAIR_OVERLAP)
+                .where("2 * c >= (na + nb - c)")
+                .selectExpr("corpus_doc", "new_doc",
+                            f"{_JACCARD_PPM} AS jaccard_ppm")
+                .distinct()
+                .orderBy("corpus_doc", "new_doc"))
 
 
 # ---------------------------------------------------------------------------
@@ -1838,6 +1797,13 @@ op_feature_hashing.__doc__ = op_feature_hashing.__doc__.replace(
 # ---------------------------------------------------------------------------
 
 _MH_EST_PPM_STEP = 1_000_000 // _N_HASH  # 62500: one matching component
+#: Signature-estimated Jaccard of a `_minhash_candidates(sigs=True)`
+#: pair: matching signature components × one component's ppm step.
+_MH_EST_PPM = "CAST((" + " + ".join(
+    f"CASE WHEN a.sig_{i} = b.sig_{i} THEN 1 ELSE 0 END"
+    for i in range(_N_HASH)) + f") * {_MH_EST_PPM_STEP} AS BIGINT)"
+#: Exact Jaccard over `_PAIR_OVERLAP`; a pure band collision scores 0.
+_MH_EXACT_PPM = f"coalesce({_ppm('c', 'na + nb - c')}, 0)"
 
 _MH_EST_DUCK_SQL = f"""
     WITH {_DUCK_MINHASH_CTES},
@@ -1881,58 +1847,22 @@ def op_minhash_est_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     universal-hash constants as `op_minhash_dedup`), so the estimate
     is a count of integer equalities; the exact side is the
     registered Jaccard arithmetic; a candidate pair with NO shared
-    shingle (a pure band collision) scores exact 0 via the left
-    join's coalesce on both engines.
+    shingle (a pure band collision) scores exact 0 on both engines
+    (the oracle via its left join's coalesce).
 
-    Scale: identical candidate machinery to `op_minhash_dedup`
-    (per-row HOF signatures, band-keyed join) — the audit adds only
-    pair-table-sized joins back to the |docs|-row signature and
-    cardinality tables, so it costs one more uniform-key join than
-    the dedup it audits, never a second corpus pass."""
-    np_ = spark.sparkContext.defaultParallelism
-    band_cols = ", ".join(
-        f"{e} AS band_{b}" for b, e in enumerate(_split_bands()))
-    bands_inline = ", ".join(
-        f"named_struct('b_idx', {b}, 'band', band_{b})"
-        for b in range(_N_BANDS))
-    est_expr = " + ".join(
-        f"CASE WHEN sa.sig_{i} = sb.sig_{i} THEN 1 ELSE 0 END"
-        for i in range(_N_HASH))
-    sig_cols = ", ".join(f"sig_{i}" for i in range(_N_HASH))
-    return Q(spark, sf_dir, f"""
-        WITH raw AS (SELECT /*+ REPARTITION({np_}) */ doc_id, text
-                     FROM documents),
-        d AS (SELECT doc_id, {_SPARK_SHINGLES} AS shingles
-              FROM (SELECT doc_id, {_SPARK_TOKS} AS toks FROM raw)),
-        sh AS (SELECT doc_id, explode(shingles) AS s FROM d),
-        shh AS (SELECT doc_id, s, {_SPARK_H} AS h FROM sh),
-        sig AS (SELECT doc_id, {_SPARK_SIGS},
-                       collect_list(s) AS shingles
-                FROM shh GROUP BY doc_id),
-        band AS (SELECT doc_id, shingles, {sig_cols},
-                      {band_cols} FROM sig),
-        bl AS (SELECT doc_id, shingles, {sig_cols},
-                      inline(array({bands_inline}))
-               FROM band),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                        a.shingles AS sha, b.shingles AS shb,
-                        {est_expr.replace("sa.", "a.").replace("sb.", "b.")}
-                          AS n_match
-                 FROM bl a JOIN bl b
-                   ON a.b_idx = b.b_idx AND a.band = b.band
-                  AND a.doc_id < b.doc_id)
-        SELECT doc_a, doc_b,
-               CAST(n_match * {_MH_EST_PPM_STEP} AS BIGINT) AS est_ppm,
-               coalesce({_ppm("c", "na + nb - c")}, 0) AS exact_ppm,
-               abs(CAST(n_match * {_MH_EST_PPM_STEP} AS BIGINT)
-                   - coalesce({_ppm("c", "na + nb - c")}, 0))
-                 AS abs_err_ppm
-        FROM (SELECT doc_a, doc_b, n_match,
-                     size(array_intersect(sha, shb)) AS c,
-                     size(sha) AS na, size(shb) AS nb
-              FROM cand)
-        ORDER BY doc_a, doc_b
-    """)
+    Scale: the `_minhash_candidates` builder of `op_minhash_dedup`,
+    with the 16 signature components riding the band rows next to the
+    shingle set — the audit is row-local arithmetic on each candidate
+    pair over one corpus pass, never a second."""
+    cand, _ = _minhash_candidates(spark, sf_dir, sigs=True)
+    return (cand.selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b",
+                            f"{_MH_EST_PPM} AS est_ppm", *_PAIR_OVERLAP)
+                .selectExpr("doc_a", "doc_b", "est_ppm",
+                            f"{_MH_EXACT_PPM} AS exact_ppm")
+                .selectExpr("doc_a", "doc_b", "est_ppm", "exact_ppm",
+                            "abs(est_ppm - exact_ppm) AS abs_err_ppm")
+                .distinct()
+                .orderBy("doc_a", "doc_b"))
 
 
 # ---------------------------------------------------------------------------
@@ -2253,63 +2183,31 @@ def op_minhash_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate table; guards drop degenerate thresholds (no positive
     predictions / no positives) identically on both engines.
 
-    Scale: identical candidate machinery to the dedup keys; the
+    Scale: the `_minhash_candidates` builder of the dedup keys; the
     sweep costs |thresholds| passes over the PAIR table (pair-sized,
     not corpus-sized). Widening the sweep widens a union of
     constant-width aggregates, never a new corpus pass."""
-    np_ = spark.sparkContext.defaultParallelism
-    band_cols = ", ".join(
-        f"{e} AS band_{b}" for b, e in enumerate(_split_bands()))
-    bands_inline = ", ".join(
-        f"named_struct('b_idx', {b}, 'band', band_{b})"
-        for b in range(_N_BANDS))
-    sig_cols = ", ".join(f"sig_{i}" for i in range(_N_HASH))
-    est_expr = " + ".join(
-        f"CASE WHEN a.sig_{i} = b.sig_{i} THEN 1 ELSE 0 END"
-        for i in range(_N_HASH))
-    sweep_arms = " UNION ALL ".join(
-        f"""SELECT {t} AS threshold_ppm,
-               CAST(sum(CASE WHEN est_ppm >= {t} AND is_dup
-                        THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-               CAST(sum(CASE WHEN est_ppm >= {t} AND NOT is_dup
-                        THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-               CAST(sum(CASE WHEN est_ppm < {t} AND is_dup
-                        THEN 1 ELSE 0 END) AS BIGINT) AS fn
-        FROM truth""" for t in _MH_SWEEP_THRESHOLDS)
-    return Q(spark, sf_dir, f"""
-        WITH raw AS (SELECT /*+ REPARTITION({np_}) */ doc_id, text
-                     FROM documents),
-        d AS (SELECT doc_id, {_SPARK_SHINGLES} AS shingles
-              FROM (SELECT doc_id, {_SPARK_TOKS} AS toks FROM raw)),
-        sh AS (SELECT doc_id, explode(shingles) AS s FROM d),
-        shh AS (SELECT doc_id, s, {_SPARK_H} AS h FROM sh),
-        sig AS (SELECT doc_id, {_SPARK_SIGS},
-                       collect_list(s) AS shingles
-                FROM shh GROUP BY doc_id),
-        band AS (SELECT doc_id, shingles, {sig_cols},
-                        {band_cols} FROM sig),
-        bl AS (SELECT doc_id, shingles, {sig_cols},
-                      inline(array({bands_inline}))
-               FROM band),
-        truth AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 CAST(({est_expr}) * {_MH_EST_PPM_STEP} AS BIGINT)
-                   AS est_ppm,
-                 coalesce({_ppm(
-                     "size(array_intersect(a.shingles, b.shingles))",
-                     "size(a.shingles) + size(b.shingles)"
-                     " - size(array_intersect(a.shingles, b.shingles))")},
-                   0) >= {_MH_SWEEP_TRUTH_PPM} AS is_dup
-          FROM bl a JOIN bl b
-            ON a.b_idx = b.b_idx AND a.band = b.band
-           AND a.doc_id < b.doc_id),
-        sweep AS ({sweep_arms})
-        SELECT threshold_ppm, tp, fp, fn,
-               {_ppm("tp", "tp + fp")} AS precision_ppm,
-               {_ppm("tp", "tp + fn")} AS recall_ppm
-        FROM sweep WHERE tp + fp > 0 AND tp + fn > 0
-        ORDER BY threshold_ppm
-    """)
+    cand, _ = _minhash_candidates(spark, sf_dir, sigs=True)
+    truth = (cand.selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b",
+                             f"{_MH_EST_PPM} AS est_ppm", *_PAIR_OVERLAP)
+                 .selectExpr("doc_a", "doc_b", "est_ppm",
+                             f"{_MH_EXACT_PPM} >= {_MH_SWEEP_TRUTH_PPM}"
+                             " AS is_dup")
+                 .distinct())
+    sweep = reduce(DataFrame.unionAll, [truth.selectExpr(
+        f"{t} AS threshold_ppm",
+        f"CAST(sum(CASE WHEN est_ppm >= {t} AND is_dup"
+        " THEN 1 ELSE 0 END) AS BIGINT) AS tp",
+        f"CAST(sum(CASE WHEN est_ppm >= {t} AND NOT is_dup"
+        " THEN 1 ELSE 0 END) AS BIGINT) AS fp",
+        f"CAST(sum(CASE WHEN est_ppm < {t} AND is_dup"
+        " THEN 1 ELSE 0 END) AS BIGINT) AS fn")
+        for t in _MH_SWEEP_THRESHOLDS])
+    return (sweep.where("tp + fp > 0 AND tp + fn > 0")
+                 .selectExpr("threshold_ppm", "tp", "fp", "fn",
+                             f"{_ppm('tp', 'tp + fp')} AS precision_ppm",
+                             f"{_ppm('tp', 'tp + fn')} AS recall_ppm")
+                 .orderBy("threshold_ppm"))
 
 
 # ---------------------------------------------------------------------------

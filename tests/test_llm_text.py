@@ -1,10 +1,14 @@
 """Text-dedup operator contracts the SQL oracle cannot see on its own:
 the size-gated verification-shape switch of `op_minhash_dedup` (the
 oracle only ever sees one result set; the gate picks between two
-exact-equivalent physical shapes) and its hash-equality across shapes.
+exact-equivalent physical shapes) and its hash-equality across shapes,
+plus the zero-job build, persist budget and single corpus pass of the
+`_minhash_candidates` builder every MinHash key shares.
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
@@ -54,55 +58,73 @@ def test_minhash_rejoin_band_rows_carry_no_payload(spark, sf_dir,
     assert "collect_list" in plan and "array_intersect" in plan
 
 
-def test_minhash_gate_is_metadata_only_and_env_overridable(
-        spark, sf_dir, monkeypatch):
-    """The gate reads parquet footers, not the cluster: building either
-    plan launches zero Spark jobs. The env override accepts exactly
-    {auto, inline, rejoin} and rejects anything else loudly (a typo'd
-    probe run must not silently fall back to auto)."""
+#: Every registry key built on `_minhash_candidates`.
+_MINHASH_KEYS = ["op_minhash_dedup", "op_incremental_dedup",
+                 "op_minhash_est_vs_exact", "op_minhash_threshold_sweep"]
+
+
+@pytest.mark.parametrize("key", _MINHASH_KEYS)
+def test_minhash_gate_is_metadata_only(spark, sf_dir, key):
+    """The gates read parquet footers, not the cluster: building the
+    plan launches zero Spark jobs (the band-table persist is lazy)."""
     from blockchain_data_ingestion_spark.catalog import (
-        table, table_column_avg_bytes)
+        query_sql, table_column_avg_bytes)
 
     avg = table_column_avg_bytes(sf_dir, "documents", "text")
     assert avg is not None and 0 < avg < 16_384  # fixture docs are small
-    table(spark, sf_dir, "documents")            # warm first-touch setup
+    query_sql(spark, sf_dir, "SELECT 1")  # warm every view's first touch
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
-    load_all()["op_minhash_dedup"].spark(spark, sf_dir)
+    load_all()[key].spark(spark, sf_dir)
     assert set(tracker.getJobIdsForGroup(None)) == before
 
-    monkeypatch.setenv("SPARK_GRAFT_MINHASH_VERIFY", "bogus")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_MINHASH_VERIFY"):
-        load_all()["op_minhash_dedup"].spark(spark, sf_dir)
 
-
+@pytest.mark.parametrize("shape", ["inline", "rejoin"])
 def test_minhash_inline_cache_gate_is_byte_budgeted(spark, sf_dir,
-                                                    monkeypatch):
-    """The inline band-table persist is gated on estimated TOTAL
-    corpus text bytes (r16, VERDICT r15 item 3): the cached frame
-    carries the full shingle payload per doc, so a many-small-docs
-    corpus must not write ~3x its size to executor local disk just
-    because the avg-bytes gate picked inline. Under budget the plan
-    carries an InMemoryRelation; over budget the SAME logical plan runs
+                                                    monkeypatch, shape):
+    """The MinHash persists are gated on estimated TOTAL corpus text
+    bytes in both verification shapes (VERDICT r15 item 3): the inline
+    band table carries the full shingle payload per doc and the rejoin
+    shingle index is ~3x the corpus, so a large corpus must not write
+    that to executor local disk. Under budget the plan carries an
+    InMemoryRelation; over budget the SAME logical plan runs
     unpersisted — and the results are identical either way."""
     q = load_all()["op_minhash_dedup"].spark
-    # pin inline mode regardless of fixture stats
     monkeypatch.setattr(
-        llm_text, "_MINHASH_INLINE_MAX_AVG_TEXT_BYTES", 1 << 30)
+        llm_text, "_MINHASH_INLINE_MAX_AVG_TEXT_BYTES",
+        1 << 30 if shape == "inline" else 1)
     monkeypatch.setattr(
-        llm_text, "_MINHASH_INLINE_CACHE_MAX_TOTAL_TEXT_BYTES", 1 << 40)
+        llm_text, "_MINHASH_CACHE_MAX_TOTAL_TEXT_BYTES", 1 << 40)
     from blockchain_data_ingestion_spark.caching import release_all
 
     cached = q(spark, sf_dir)
     plan = cached._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" in plan, "under-budget inline lost its persist"
+    assert "InMemoryRelation" in plan, f"under-budget {shape} lost its persist"
     cached_rows = _rows(cached)
     release_all()  # else the CacheManager substitutes the live persist
     monkeypatch.setattr(
-        llm_text, "_MINHASH_INLINE_CACHE_MAX_TOTAL_TEXT_BYTES", 1)
+        llm_text, "_MINHASH_CACHE_MAX_TOTAL_TEXT_BYTES", 1)
     uncached = q(spark, sf_dir)
     plan = uncached._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" not in plan, (
-        "over-budget inline still persists a corpus-scale band table")
-    assert "collect_list" in plan  # still the inline verification shape
+        f"over-budget {shape} still persists a corpus-scale table")
+    # still the requested verification shape
+    assert ("collect_list" in plan) == (shape == "inline")
     assert cached_rows == _rows(uncached)
+
+
+@pytest.mark.parametrize("key", _MINHASH_KEYS[1:])
+def test_minhash_keys_scan_documents_once(spark, sf_dir, key):
+    """One signature pass feeds both sides of the band self-join: the
+    executed plan has a single documents scan. (A plan that derives each
+    join side on its own scans twice — the round-robin REPARTITION
+    exchange blocks exchange reuse, see
+    plans/r15/op_minhash_dedup_before.txt.) The formatted explain gives
+    a node one id however often the tree prints it."""
+    df = load_all()[key].spark(spark, sf_dir)
+    df.collect()
+    plan = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils \
+        .explainString(df._jdf.queryExecution(), "formatted")
+    assert "isFinalPlan=true" in plan
+    scans = set(re.findall(r"Scan parquet\s*\((\d+)\)", plan))
+    assert len(scans) == 1, f"{key} scans documents {len(scans)} times"
