@@ -68,13 +68,8 @@ def _optimized_path(sf_dir: str, name: str) -> str:
     regenerated fixtures invalidate stale copies. Same rows, same schema,
     same format; only the chunking differs (measured: sf0.1 q1 agg
     0.43 s -> 0.20 s with ``spark.sql.files.maxPartitionBytes=1m``).
-
-    Opt out with ``SPARK_GRAFT_NO_LAYOUT_OPT=1`` (e.g. to benchmark the
-    raw single-row-group scan path itself).
     """
     src = f"{sf_dir}/{name}.parquet"
-    if os.environ.get("SPARK_GRAFT_NO_LAYOUT_OPT"):
-        return src
     try:
         import pyarrow.parquet as pq
         meta = pq.ParquetFile(src).metadata

@@ -302,7 +302,7 @@ def op_similarity_lsh_multiprobe(spark: SparkSession,
 #: multiply-adds: n·(n−1)/2 × dims (VERDICT r14 item 1 — the old
 #: 131k ROW cap gated on rows, not work, so its own worst case was
 #: unmeasured and dimension-blind). The budget is wall-clock-derived:
-#: the r15 sf3 split probe (tools/cosine_split_r15.py, SCALE.md r15)
+#: the sf3 split probe (its findings are recorded in SCALE.md)
 #: measured the engine's blocked-numpy exact path at ~1.26e9
 #: work-units/s end-to-end on this box (60k×64d → 1.15e11 work in
 #: 91.1 s cold), so 6e11 bounds the exact stage at ≈ 8 min single-node —

@@ -21,11 +21,18 @@ from pyspark.sql import functions as F
 from ..catalog import table as T
 from ..catalog import table_row_count
 from ..scratch import fresh_scratch_dir
-from ..streaming import (events_stream, events_stream_bounded,
-                         run_to_memory, split_events_files)
+from ..streaming import (events_stream, events_stream_bounded, land_feed,
+                         read_feed, run_to_memory, split_events_files)
 from . import register
 
 _DEC = "decimal(18,4)"
+
+
+def _append_to(out: str):
+    """foreachBatch sink appending every micro-batch to parquet ``out``."""
+    def sink(df: DataFrame, batch_id: int) -> None:
+        df.write.mode("append").parquet(out)
+    return sink
 
 
 @register(
@@ -183,10 +190,8 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     set (evicted windows lose precisely their late rows; live windows
     keep them)."""
     feed = split_events_files(spark, sf_dir, "wm_late")
-    batch = spark.read.parquet(feed)
-    s = (spark.readStream.schema(batch.schema)
-              .option("maxFilesPerTrigger", "1").parquet(feed)
-              .withWatermark("ts", "5 minutes"))
+    s = (read_feed(spark, feed, max_files_per_trigger=1)
+         .withWatermark("ts", "5 minutes"))
     agg = (s.groupBy(F.window("ts", "1 hour"))
              .agg(F.count("*").alias("n_events"))
              .select(F.col("window.start").alias("wstart"), "n_events"))
@@ -220,10 +225,9 @@ def ss_join_plan(a_src: DataFrame, b_src: DataFrame) -> DataFrame:
     """The stream_stream_join logical plan over two already-streaming
     event sources: even-id half ⋈ odd-id half on user_id plus a 10 min
     event-time range, watermarked 30 min on BOTH sides. Factored out so
-    scale probes (tools/stream_profile_r14.py) can drive the IDENTICAL
-    plan from a bounded-arrival (multi-file, time-ordered) source and
-    measure state eviction — the registry key and the probe must never
-    diverge in join shape."""
+    a scale probe can drive the IDENTICAL plan from any arrival shape
+    (single-file or bounded landing) and measure state eviction — the
+    registry key and the probe must never diverge in join shape."""
     a = (a_src.filter(F.col("event_id") % 2 == 0)
               .select("user_id", "event_id", "ts")
               .withWatermark("ts", "30 minutes"))
@@ -318,11 +322,7 @@ def stream_foreachbatch_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (events_stream(spark, sf_dir)
          .filter(F.col("event_id") < 4000)
          .select("event_id", "user_id", "value"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("append").parquet(out)
-
-    run_to_memory(s, "t_stream_fb", "append", foreach_batch=sink)
+    run_to_memory(s, "t_stream_fb", "append", foreach_batch=_append_to(out))
     return spark.read.parquet(out)
 
 
@@ -370,11 +370,8 @@ def stream_backfill_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tail = (events_stream(spark, sf_dir)
             .filter(F.col("event_id") >= cut).select(*cols))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("append").parquet(out)
-
-    run_to_memory(tail, "t_stream_tail", "append", foreach_batch=sink)
+    run_to_memory(tail, "t_stream_tail", "append",
+                  foreach_batch=_append_to(out))
     return spark.read.parquet(out)
 
 
@@ -566,52 +563,34 @@ def stream_recovery_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a strict prefix; state is the file-source log + parquet sink —
     both O(batches), not O(rows); the verification aggregate is one
     two-phase count over the landed dir."""
-    import os
-    import shutil
-
     stage = fresh_scratch_dir("stream_recovery", "stage")
     feed = fresh_scratch_dir("stream_recovery", "feed")
     out = fresh_scratch_dir("stream_recovery", "landed")
     ckpt = fresh_scratch_dir("stream_recovery", "ckpt")
     cols = ["event_id", "user_id", "event_type", "value"]
-    (T(spark, sf_dir, "events").select(*cols)
-     .repartition(4).write.mode("overwrite").parquet(stage))
-    parts = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
-    schema = spark.read.parquet(stage).schema
-    os.makedirs(feed, exist_ok=True)
-    if parts:  # empty-input totality: an empty write has no part files
-        shutil.copy(os.path.join(stage, parts[0]),
-                    os.path.join(feed, parts[0]))
-
-    def landed_stream():
-        return spark.readStream.schema(schema).parquet(feed)
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("append").parquet(out)
+    staged = land_feed(stage, [T(spark, sf_dir, "events").select(*cols)
+                               .repartition(4)])
+    land_feed(feed, staged[:1])
+    src = read_feed(spark, feed)
+    sink = _append_to(out)
 
     # run 1: only file 0 is visible — drain it and "crash"
-    q1 = (landed_stream().writeStream
+    q1 = (src.writeStream
           .option("checkpointLocation", ckpt)
           .outputMode("append").foreachBatch(sink)
           .trigger(once=True).start())
     q1.awaitTermination()
     # the rest of the feed "arrives while the job is down"
-    for f in parts[1:]:
-        shutil.copy(os.path.join(stage, f), os.path.join(feed, f))
+    land_feed(feed, staged[1:])
     # run 2: fresh query object, SAME checkpoint — must skip file 0
-    q2 = (landed_stream().writeStream
+    q2 = (src.writeStream
           .option("checkpointLocation", ckpt)
           .outputMode("append").foreachBatch(sink).start())
     q2.processAllAvailable()
     q2.stop()
 
-    import os as _os
-    if not any(f.endswith(".parquet") for f in _os.listdir(out)):
-        # empty-input totality: an empty feed lands nothing; read with
-        # the explicit schema instead of failing schema inference
-        landed = spark.createDataFrame([], schema)
-    else:
-        landed = spark.read.parquet(out)
+    # explicit schema: an empty feed lands nothing to infer it from
+    landed = spark.read.schema(src.schema).parquet(out)
     return (landed.groupBy("event_type")
             .agg(F.count("*").cast("long").alias("n_events"),
                  F.countDistinct("event_id").cast("long")

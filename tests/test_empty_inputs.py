@@ -1,4 +1,5 @@
-"""Empty-input totality: every batch operator must degrade to an empty
+"""Empty-input totality: every registry operator, streaming keys
+included (an empty feed drains to an empty result), must degrade to an empty
 (or statistics-of-nothing) result on schema-identical EMPTY tables, not
 raise — at 100 TB an empty slice is routine (a fresh date partition, a
 chain with no traffic yet, a filtered dev subset), and an operator that
@@ -19,7 +20,7 @@ import pytest
 
 from blockchain_data_ingestion_spark.queries import load_all
 
-KEYS = sorted(k for k in load_all() if not k.startswith("stream_"))
+KEYS = sorted(load_all())
 
 
 @pytest.fixture(scope="session")

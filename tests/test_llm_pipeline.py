@@ -501,8 +501,8 @@ def test_release_checkpoint_actually_unpersists(spark):
     accumulating superseded round state (r8 VERDICT #6). This pins the
     behavior: after localCheckpoint the backing blocks are registered
     with the block manager; after _release_checkpoint they are gone."""
-    from blockchain_data_ingestion_spark.queries.llm_pipeline import (
-        _release_checkpoint)
+    from blockchain_data_ingestion_spark.caching import (
+        release_checkpoint as _release_checkpoint)
 
     df = spark.range(1000).selectExpr("id", "id * 2 AS v").localCheckpoint()
     df.count()
